@@ -1112,6 +1112,8 @@ def _directive_introspection(schema_doc, sel_fields):
     introspection roots."""
     from pyspark.sql import functions as F
 
+    from terminus_server_spark.session import local_frame
+
     spark = schema_doc.sparkSession
     rows = [
         (
@@ -1129,7 +1131,8 @@ def _directive_introspection(schema_doc, sel_fields):
             [{"name": "if", "type": "Boolean!"}],
         ),
     ]
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         rows,
         "name string, description string, locations array<string>, "
         "args array<struct<name: string, type: string>>",
@@ -1181,6 +1184,7 @@ def _path_query(store, args, fields):
     from pyspark.sql import functions as F
 
     from terminus_server_spark.operators.path import anchored_closure, compile_path
+    from terminus_server_spark.session import local_frame
     from terminus_server_spark.woql import path_ast as P
     from terminus_server_spark.woql.path_ast import parse_path_string
 
@@ -1190,7 +1194,7 @@ def _path_query(store, args, fields):
     frm = args.get("from")
     if frm is not None and isinstance(pat, (P.Plus, P.Star)):
         spark = store.df.sparkSession
-        anchors = spark.createDataFrame([(frm,)], "node string")
+        anchors = local_frame(spark, [(frm,)], "node string")
         df = anchored_closure(
             compile_path(store, pat.part).select("src", "dst"),
             anchors,

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
 
+from terminus_server_spark.session import local_frame
+
 TRIPLE_COLS = ("graph", "subject", "predicate", "obj", "obj_type", "obj_num")
 TRIPLE_EXT_COLS = ("obj_lang", "obj_ts")
 
@@ -782,7 +784,8 @@ def to_turtle(triples: DataFrame, base: str = "http://example.org/") -> DataFram
             "line"
         ),
     )
-    headers = triples.sparkSession.createDataFrame(
+    headers = local_frame(
+        triples.sparkSession,
         [
             ("", f"@prefix i: <{base}i/> ."),
             ("", f"@prefix p: <{base}p/> ."),

@@ -24,6 +24,7 @@ from terminus_server_spark.checkpoint import (
 )
 
 from terminus_server_spark.operators.path import no_constraint_propagation
+from terminus_server_spark.session import local_frame
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -207,7 +208,8 @@ def connected_components_decremental(
        is already canonical a<b and duplicate-free, e.g. the
        streaming edge store) the base is never shuffled at all —
        otherwise one canonicalizing ``distinct()`` pass over the
-       base runs first;
+       base runs first; when it is empty the labels pass through
+       unchanged after that one job;
     2. dirty = the deleted endpoints' component ids (delta-sized);
     3. the affected subgraph = post-delete edges with an endpoint in
        a dirty component (base edges never cross components, so one
@@ -244,7 +246,10 @@ def connected_components_decremental(
         eb = und(base_edges)
     dels = und(delete_edges)
     real = eb.join(F.broadcast(dels), ["a", "b"], "left_semi")
-    real = loop_checkpoint(real)
+    real, n_real = loop_checkpoint_count(real)
+    if n_real == 0:
+        # no delete hits a stored edge: nothing can split
+        return labels
     e_new = eb.join(F.broadcast(dels), ["a", "b"], "left_anti")
     # deleted-endpoint → component lookup: broadcast the (delta-sized)
     # endpoint set so the stored label table is probed MAP-SIDE — the
@@ -305,7 +310,7 @@ def cc_metadata(
     )
     rows = base.limit(limit + 1).collect()
     if len(rows) > limit:
-        return connected_components(edges, max_iters)
+        return connected_components(base, max_iters)
 
     parent: dict = {}
 
@@ -337,8 +342,8 @@ def cc_metadata(
             T.StructField("component", src_type, True),
         ]
     )
-    return edges.sparkSession.createDataFrame(
-        [(n, comp_min[find(n)]) for n in parent], out_schema
+    return local_frame(
+        edges.sparkSession, [(n, comp_min[find(n)]) for n in parent], out_schema
     )
 
 
@@ -2398,8 +2403,8 @@ def scc_metadata(
             T.StructField("component", src_type, True),
         ]
     )
-    return edges.sparkSession.createDataFrame(
-        [(n, comp_of[n]) for n in nodes], out_schema
+    return local_frame(
+        edges.sparkSession, [(n, comp_of[n]) for n in nodes], out_schema
     )
 
 
@@ -3772,9 +3777,9 @@ def bidirectional_distance(
             "bidirectional_distance: round cap hit before the midpoint "
             "stopping rule proved exactness; raise max_iters"
         )
-    # JVM-side one-row result: createDataFrame from a Python tuple
-    # routes through a pickled PythonRDD (first use pays the Python
-    # worker cold start); literals on range(1) stay JVM-side.
+    # JVM-side one-row result: a literal on range(1) needs no rows
+    # shipped at all (driver-built row lists go through
+    # session.local_frame, never a pickled createDataFrame).
     return spark.range(1).select(F.lit(best).cast("bigint").alias("hops"))
 
 

@@ -8,9 +8,10 @@ Arrow enabled for the few Pandas-UDF operators.
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
 def get_spark(app_name: str = "terminus-server-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -42,8 +43,43 @@ def get_spark(app_name: str = "terminus-server-spark", shuffle_partitions: int |
         # driver-generated parquet uses TIMESTAMP(NANOS) which the
         # vectorized reader rejects; read as long and rebuild below
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark wraps every DataFrame/functions call in a call-site
+        # capture (active-session lookup, conf read, origin set/clear:
+        # ~4 py4j round trips each).  A WOQL compile makes hundreds of
+        # such calls, so the capture was about two thirds of its py4j
+        # traffic; JVM errors lose only the Python call-site context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@functools.lru_cache(maxsize=128)
+def _struct(ddl: str) -> T.StructType:
+    """Parsed DDL (a JVM round trip); the engine's DDL strings are
+    literals, so the cache stays small."""
+    return T.StructType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema``
+    order) as an Arrow-backed ``LocalRelation``.
+
+    ``createDataFrame(list, schema)`` pickles the rows into a
+    ``parallelize``d RDD: a ``LogicalRDD`` leaf with no size estimate
+    (never auto-broadcast) that re-reads the pickled rows in a Python
+    worker on every evaluation.  The same rows as a ``pyarrow.Table``
+    become a ``LocalRelation`` with an exact size, which collects with
+    no job and broadcasts like any small dimension table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _struct(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):

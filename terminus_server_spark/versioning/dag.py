@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from terminus_server_spark.checkpoint import loop_checkpoint_count, loop_tuning
+from terminus_server_spark.session import local_frame
 
 
 def parent_edges(commits: DataFrame) -> DataFrame:
@@ -77,8 +78,8 @@ def log_walk(commits: DataFrame, head: str, max_depth: int = 1000) -> DataFrame:
     if dag is not None:
         ids, parents = dag
         depth = _bfs_depths(ids, parents, head, max_depth)
-        return commits.sparkSession.createDataFrame(
-            list(depth.items()), "commit_id string, depth int"
+        return local_frame(
+            commits.sparkSession, list(depth.items()), "commit_id string, depth int"
         )
     return _log_walk_distributed(commits, head, max_depth)
 
@@ -168,8 +169,8 @@ def reachable_commits(
             if not nxt:
                 break
             frontier = nxt
-        return commits.sparkSession.createDataFrame(
-            [(c,) for c in sorted(seen)], "commit_id string"
+        return local_frame(
+            commits.sparkSession, [(c,) for c in sorted(seen)], "commit_id string"
         )
     return _reachable_distributed(commits, heads, max_depth)
 
@@ -239,12 +240,12 @@ def merge_base(commits: DataFrame, head_a: str, head_b: str) -> DataFrame:
         # table) have no merge base — report it as an empty frame,
         # matching the distributed path's limit(1)-of-empty result
         if not common:
-            return commits.sparkSession.createDataFrame(
-                [], "merge_base string, depth_a int, depth_b int"
+            return local_frame(
+                commits.sparkSession, [], "merge_base string, depth_a int, depth_b int"
             )
         best = min(common, key=lambda t: (t[1] + t[2], t[0]))
-        return commits.sparkSession.createDataFrame(
-            [best], "merge_base string, depth_a int, depth_b int"
+        return local_frame(
+            commits.sparkSession, [best], "merge_base string, depth_a int, depth_b int"
         )
     wa = _log_walk_distributed(commits, head_a).withColumnRenamed("depth", "depth_a")
     wb = _log_walk_distributed(commits, head_b).withColumnRenamed("depth", "depth_b")

@@ -8,9 +8,12 @@ terminusdb-store src/layer, terminus-server src/core/api/db_*).
 Spark translation: one ``layers`` DataFrame
 ``(commit_seq, commit_id, op ∈ {add, del}, <entity columns...>)``.
 Materialization at a commit is a *window* over the entity key — the
-latest op at-or-before the commit decides visibility.  No driver
-loops; every verb is one or two shuffles and scales with delta size,
-not history length.
+latest op at-or-before the commit decides visibility; at one
+commit_seq an add beats a del (``apply_delta`` applies a commit's
+deletes before its adds).  A diff needs only the last op at each end,
+so it is one keyed aggregate: one scan of the stack, one exchange.
+No driver loops; every verb is one or two shuffles and scales with
+delta size, not history length.
 """
 
 from __future__ import annotations
@@ -22,8 +25,9 @@ from pyspark.sql.window import Window
 def materialize(layers: DataFrame, at_seq: int, key_cols: list[str]) -> DataFrame:
     """State visible at commit ``at_seq``: for each entity key, the
     newest op with commit_seq <= at_seq; visible iff that op is an
-    add.  One window shuffle on the entity key."""
-    w = Window.partitionBy(*key_cols).orderBy(F.col("commit_seq").desc())
+    add (an add wins a tie at one commit_seq).  One window shuffle on
+    the entity key."""
+    w = Window.partitionBy(*key_cols).orderBy(F.col("commit_seq").desc(), F.col("op"))
     return (
         layers.where(F.col("commit_seq") <= at_seq)
         .withColumn("_rn", F.row_number().over(w))
@@ -46,14 +50,45 @@ def purge_keys(layers: DataFrame, keys: DataFrame, key_cols: list[str]) -> DataF
     return layers.join(keys, key_cols, "left_anti")
 
 
+def _last_op_rank(at_seq: int):
+    """Aggregate input ranking a key's ops up to ``at_seq``: later
+    commits rank higher and, at one commit_seq, an add outranks a del
+    (``materialize``'s tie-break).  NULL past ``at_seq``, so a max
+    over it is the key's last op there: odd = visible, even = deleted,
+    NULL = never written."""
+    return F.when(
+        F.col("commit_seq") <= at_seq,
+        F.col("commit_seq").cast("long") * 2 + (F.col("op") == "add").cast("long"),
+    )
+
+
+def _ends(layers: DataFrame, from_seq: int, to_seq: int, key_cols: list[str], *aggs):
+    """Per key, its visibility at both ends (``_in_a``/``_in_b``) plus
+    ``aggs`` — one scan and one keyed aggregate."""
+    g = (
+        layers.where(F.col("commit_seq") <= max(from_seq, to_seq))
+        .groupBy(*key_cols)
+        .agg(
+            F.max(_last_op_rank(from_seq)).alias("_a"),
+            F.max(_last_op_rank(to_seq)).alias("_b"),
+            *aggs,
+        )
+    )
+    return g.select(
+        "*",
+        F.coalesce(F.col("_a") % 2 == 1, F.lit(False)).alias("_in_a"),
+        F.coalesce(F.col("_b") % 2 == 1, F.lit(False)).alias("_in_b"),
+    ).where(F.col("_in_a") != F.col("_in_b"))
+
+
 def diff(layers: DataFrame, from_seq: int, to_seq: int, key_cols: list[str]) -> DataFrame:
     """Triple-level diff between two commits: (op ∈ {added, removed},
-    key...).  Two materializations + anti-joins."""
-    a = materialize(layers, from_seq, key_cols).select(*key_cols)
-    b = materialize(layers, to_seq, key_cols).select(*key_cols)
-    added = b.join(a, key_cols, "left_anti").select(F.lit("added").alias("op"), *key_cols)
-    removed = a.join(b, key_cols, "left_anti").select(F.lit("removed").alias("op"), *key_cols)
-    return added.unionByName(removed)
+    key...).  Equal to the set difference of ``materialize`` at both
+    ends, but one scan of the stack and one exchange: a single
+    ``groupBy(key)`` takes each key's last op at either end."""
+    return _ends(layers, from_seq, to_seq, key_cols).select(
+        F.when(F.col("_in_b"), "added").otherwise("removed").alias("op"), *key_cols
+    )
 
 
 def squash(layers: DataFrame, up_to_seq: int, key_cols: list[str], new_commit: str) -> DataFrame:
@@ -153,16 +188,27 @@ def diff_rows(layers: DataFrame, from_seq: int, to_seq: int, key_cols: list[str]
     """Diff between two commits *with payload columns* — the form the
     reference's ``api/apply`` consumes (a diff is itself a set of full
     triples tagged added/removed, not just keys).  Added rows carry
-    the ``to`` side's payload, removed rows the ``from`` side's."""
-    a = materialize(layers, from_seq, key_cols).drop("commit_seq", "commit_id")
-    b = materialize(layers, to_seq, key_cols).drop("commit_seq", "commit_id")
-    added = b.join(a.select(*key_cols), key_cols, "left_anti").select(
-        F.lit("added").alias("op"), *b.columns
+    the ``to`` side's payload, removed rows the ``from`` side's.  Same
+    single aggregate as :func:`diff`, carrying each end's winning row
+    through ``max_by`` over the same rank."""
+    cols = [c for c in layers.columns if c not in ("commit_seq", "commit_id", "op")]
+    payload = [c for c in cols if c not in key_cols]
+    ends = _ends(
+        layers, from_seq, to_seq, key_cols,
+        *[
+            F.max_by(F.struct(*payload), _last_op_rank(seq)).alias(name)
+            for seq, name in ((from_seq, "_pa"), (to_seq, "_pb"))
+            if payload
+        ],
     )
-    removed = a.join(b.select(*key_cols), key_cols, "left_anti").select(
-        F.lit("removed").alias("op"), *a.columns
+    return ends.select(
+        F.when(F.col("_in_b"), "added").otherwise("removed").alias("op"),
+        *[
+            F.col(c) if c in key_cols
+            else F.when(F.col("_in_b"), F.col("_pb")[c]).otherwise(F.col("_pa")[c]).alias(c)
+            for c in cols
+        ],
     )
-    return added.unionByName(removed)
 
 
 def apply_as_commit(

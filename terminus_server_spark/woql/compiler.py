@@ -30,6 +30,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F
 
 from terminus_server_spark.model.triples import TripleStore
+from terminus_server_spark.session import local_frame
 from terminus_server_spark.woql import ast as A
 from terminus_server_spark.woql.path_ast import PathPattern
 
@@ -575,7 +576,7 @@ class WOQLContext:
         # applied whenever the WOQL word's subject is bound
         graph = self._graph_stack[-1] if self._graph_stack else "instance"
         if not _is_var(t.s) and isinstance(t.pattern, (P.Plus, P.Star)):
-            anchors = self.spark.createDataFrame([(t.s,)], "node string")
+            anchors = local_frame(self.spark, [(t.s,)], "node string")
             edges = anchored_closure(
                 compile_path(self.store, t.pattern.part, graph).select("src", "dst"),
                 anchors,

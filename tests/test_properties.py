@@ -264,8 +264,10 @@ _layer_rows = st.lists(
 
 
 def _py_materialize(rows, at_seq):
+    """{(key, payload)} visible at ``at_seq``: each key's last op wins;
+    at one commit_seq an add beats a del."""
     latest = {}
-    for seq, op, k, v in sorted(rows):
+    for seq, op, k, v in sorted(rows, key=lambda r: (r[0], r[1] == "add")):
         if seq <= at_seq:
             latest[k] = (seq, op, v)
     return {(k, v) for k, (seq, op, v) in latest.items() if op == "add"}
@@ -296,6 +298,50 @@ def test_versioning_laws_property(spark, rows, at_seq):
     assert got_sq == got
 
     assert diff(layers, at_seq, at_seq, ["k"]).count() == 0
+
+
+@settings(**SETTINGS)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(1, 4),  # commit_seq
+            st.sampled_from(["add", "del"]),
+            st.integers(0, 9),  # entity key
+            st.integers(0, 3),  # payload
+        ),
+        min_size=1,
+        max_size=20,
+        # an add AND a del of one key may share a commit_seq
+        unique_by=lambda r: (r[0], r[1], r[2]),
+    ),
+    st.integers(0, 5),
+    st.integers(0, 5),
+)
+def test_diff_is_the_set_difference_of_materialize(spark, rows, a, b):
+    """For any two ends (either order): diff = the key set difference
+    of the states at both ends, diff_rows carries the payload of the
+    side the row is visible on, and materialize agrees with the same
+    oracle at both ends (same tie-break as diff)."""
+    from terminus_server_spark.versioning.layers import diff, diff_rows, materialize
+
+    layers = spark.createDataFrame(
+        [(seq, f"c{seq}", op, k, v) for seq, op, k, v in rows],
+        "commit_seq int, commit_id string, op string, k int, v int",
+    )
+    at_a, at_b = _py_materialize(rows, a), _py_materialize(rows, b)
+    for seq, want in ((a, at_a), (b, at_b)):
+        got = {(r.k, r.v) for r in materialize(layers, seq, ["k"]).collect()}
+        assert got == want
+    keys_a, keys_b = {k for k, _ in at_a}, {k for k, _ in at_b}
+    assert sorted(map(tuple, diff(layers, a, b, ["k"]).collect())) == sorted(
+        [("added", k) for k in keys_b - keys_a] + [("removed", k) for k in keys_a - keys_b]
+    )
+    got_rows = diff_rows(layers, a, b, ["k"])
+    assert got_rows.columns == ["op", "k", "v"]
+    assert sorted(map(tuple, got_rows.collect())) == sorted(
+        [("added", k, v) for k, v in at_b if k not in keys_a]
+        + [("removed", k, v) for k, v in at_a if k not in keys_b]
+    )
 
 
 @given(
